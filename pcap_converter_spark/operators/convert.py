@@ -7,9 +7,11 @@ through untouched.
 
 The two-phase temp-file shape is kept deliberately (D7): at 100 TB the
 decode pass is the expensive stage, and materializing it once means (a) the
-defrag decision aggregate and the rewrite both read cheap columnar Parquet
-with column pruning instead of re-decoding, and (b) a failed stage 2
-restarts without re-running stage 1.
+defrag rewrite reads cheap columnar Parquet with column pruning instead of
+re-decoding, and (b) a failed stage 2 restarts without re-running stage 1.
+The defrag decision needs no pass of its own: the fragment count is observed
+on the stage-1 write, next to the packet and error counts, so a passthrough
+conversion of a few files is one Spark job.
 """
 
 from __future__ import annotations
@@ -17,9 +19,9 @@ from __future__ import annotations
 import shutil
 import sys
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Observation, SparkSession
 
-from pcap_converter_spark.operators.defrag import defrag, fragmentation_pct
+from pcap_converter_spark.operators.defrag import defrag, fragment_count, pct_from_counts
 from pcap_converter_spark.sources.pcap import DEFAULT_CHUNK_BYTES, read_pcap
 
 
@@ -42,41 +44,35 @@ def convert(
     """
     tmp = out.rstrip("/") + ".stage1.tmp"
     decoded, stats = read_pcap(spark, paths, target_chunk_bytes)
+    frags = Observation()
 
     # Stage 1 (K1): decode → temp Parquet (snappy via session conf). The
-    # packet/error totals ride the SAME action as plan observations —
-    # exact (retry-safe, exactly-once), and no separate count() scan.
-    decoded.write.mode("overwrite").parquet(tmp)
-    stage1 = spark.read.parquet(tmp)
+    # packet/error totals and R2's fragment count ride the SAME action as
+    # plan observations — exact (retry-safe, exactly-once), and no
+    # separate scan. Observe counts only: a failing observed expression
+    # leaves Observation.get waiting forever.
+    decoded.observe(frags, fragment_count()).write.mode("overwrite").parquet(tmp)
     n_packets = int(stats.get["packets"])
     n_errors = int(stats.get["errors"])
     print(f"Packets: {n_packets} Errors: {n_errors}", file=sys.stderr)
 
     defragged = False
-    pct = 0.0
+    pct = 0.0 if nodefrag else pct_from_counts(int(frags.get["fragments"]), n_packets)
     try:
-        if nodefrag:
+        if nodefrag or pct < defrag_threshold_pct:
+            # K3 passthrough: nodefrag or <1% fragmented → stage-1
+            # output IS the result (main.rs:277-284); a rename beats a
+            # rewrite.
             if single_file:
-                stage1.coalesce(1).write.mode("overwrite").parquet(out)
+                spark.read.parquet(tmp).coalesce(1).write.mode("overwrite").parquet(out)
             else:
                 _move_dir(tmp, out)
         else:
-            # R2 decision agg reads only the 3 predicate columns from Parquet
-            # (column pruning), not the full 31-column rows.
-            pct = fragmentation_pct(stage1)
-            if pct < defrag_threshold_pct:
-                # K3 passthrough: <1% fragmented → stage-1 output IS the
-                # result (main.rs:277-284); a rename beats a rewrite.
-                if single_file:
-                    stage1.coalesce(1).write.mode("overwrite").parquet(out)
-                else:
-                    _move_dir(tmp, out)
-            else:
-                result = defrag(stage1)
-                if single_file:
-                    result = result.coalesce(1)
-                result.write.mode("overwrite").parquet(out)
-                defragged = True
+            result = defrag(spark.read.parquet(tmp))
+            if single_file:
+                result = result.coalesce(1)
+            result.write.mode("overwrite").parquet(out)
+            defragged = True
     finally:
         shutil.rmtree(tmp, ignore_errors=True)  # main.rs:306
 
@@ -98,13 +94,3 @@ def _move_dir(src: str, dst: str) -> None:
         shutil.copytree(src, dst)
         shutil.rmtree(src, ignore_errors=True)
 
-
-def convert_df(packets: DataFrame, nodefrag: bool = False,
-               defrag_threshold_pct: float = 1.0) -> DataFrame:
-    """In-plan variant: packets DataFrame → (conditionally) defragged
-    DataFrame, no temp materialization. For callers composing further."""
-    if nodefrag:
-        return packets
-    if fragmentation_pct(packets) < defrag_threshold_pct:
-        return packets
-    return defrag(packets)

@@ -3,9 +3,11 @@
 Mirrors /root/reference/src/main.rs:268-301 (R2-R6 in SURVEY.md §2.3):
 
 - R2 ``fragmentation_pct``: the reference runs a filtered COUNT with a scalar
-  subquery (main.rs:274). Here the subquery fuses into ONE conditional
-  aggregate — a single scan, no second job, no shuffle beyond the final
-  1-row reduce.
+  subquery (main.rs:274). Here the plan only counts — ``fragment_count()``
+  and the row count, as one conditional aggregate or as observations on a
+  write — and ``pct_from_counts`` divides on the driver with Spark's HALF_UP
+  ``round``, so a capture with no packets reads 0% instead of dividing by
+  zero. ``convert`` observes the count on its stage-1 write: no extra scan.
 - R3 branch: <1% fragmented → skip the rewrite entirely (main.rs:277-284).
 - R4 ``first_fragments``: one row per fragmented UDP datagram carrying its
   first fragment's app-layer fields. The reference uses DuckDB ``first()``
@@ -25,6 +27,8 @@ the 100 TB side is never shuffled.
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -43,14 +47,25 @@ def fragment_predicate() -> "F.Column":
     ) | (F.col("ip_frag_offset") > 0)
 
 
+def fragment_count() -> "F.Column":
+    """Aggregate: number of fragment rows (``fragment_predicate``)."""
+    return F.count(F.when(fragment_predicate(), F.lit(1))).alias("fragments")
+
+
+def pct_from_counts(fragments: int, packets: int) -> float:
+    """R2's percentage from exact counts: ``round(100.0 * fragments /
+    packets)`` as Spark evaluates it (double arithmetic, then HALF_UP on
+    the double's decimal form), and 0.0 for no packets."""
+    if packets == 0:
+        return 0.0
+    pct = Decimal(repr(100.0 * fragments / packets))
+    return float(pct.quantize(Decimal(1), rounding=ROUND_HALF_UP))
+
+
 def fragmentation_pct(packets: DataFrame) -> float:
-    """R2: % of rows that are fragments, as one conditional aggregate."""
-    row = packets.agg(
-        F.round(
-            100.0 * F.count(F.when(fragment_predicate(), F.lit(1))) / F.count(F.lit(1))
-        ).alias("pct")
-    ).collect()[0]
-    return float(row["pct"] if row["pct"] is not None else 0.0)
+    """R2: % of rows that are fragments, from one conditional aggregate."""
+    row = packets.agg(fragment_count(), F.count(F.lit(1)).alias("packets")).collect()[0]
+    return pct_from_counts(row["fragments"], row["packets"])
 
 
 def first_fragments(packets: DataFrame) -> DataFrame:

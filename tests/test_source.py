@@ -160,3 +160,37 @@ def test_corpus_chunk_frame_never_collects_descriptors(spark, tmp_path,
     assert {r["pcap_file"]: r["count"] for r in got} == {
         f"c{i}.pcap": 10 + i for i in range(6)
     }
+
+
+def test_few_files_decode_plan_has_no_exchange(spark, tmp_path):
+    """A few files plan one partition per chunk straight from the JVM: no
+    Python planning stage and no shuffle in front of the decode."""
+    from pcap_converter_spark.sources.pcap import read_pcap
+
+    path = str(tmp_path / "multi.pcap")
+    g.write_pcap(path, [(1_000_000 + i, _udp_pkt(i)) for i in range(200)])
+    n_chunks = len(index_pcap(path, target_chunk_bytes=1 << 10))
+    assert n_chunks > 1, "test needs multiple chunks"
+    decoded, _ = read_pcap(spark, path, target_chunk_bytes=1 << 10)
+    plan = decoded._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert decoded.rdd.getNumPartitions() == n_chunks
+    assert decoded.count() == 200
+
+
+def test_passthrough_convert_is_one_spark_job(spark, tmp_path):
+    """Decode, the packet/error/fragment counts and the stage-1 write are
+    one action; a passthrough then only renames the directory."""
+    from pcap_converter_spark.operators.convert import convert
+
+    path = str(tmp_path / "plain.pcap")
+    g.write_pcap(path, [(1_000_000 + i, _udp_pkt(i)) for i in range(50)])
+    sc = spark.sparkContext
+    group = "test-passthrough-one-job"
+    sc.setJobGroup(group, group)
+    try:
+        stats = convert(spark, path, str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stats == {"packets": 50, "errors": 0, "fragment_pct": 0.0, "defragged": False}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
