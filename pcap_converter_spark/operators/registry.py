@@ -3201,96 +3201,25 @@ _DRAIN_NO_EMPTY_BATCH = (
 )
 
 
-class _scoped_shuffle_partitions:
-    """Temporarily set spark.sql.shuffle.partitions for one entry's
-    eager window, restoring the caller's value after — the conf is read
-    at execution-plan time, so it only affects plans materialized inside
-    the scope.
-
-    REF-COUNTED and thread-safe (r12): run_curate materializes its two
-    independent phases on concurrent driver threads, both inside this
-    scope — the conf is SESSION-global, so a plain save/restore pair per
-    thread would let the first thread to exit flip the other's
-    still-materializing plans back to the session default mid-phase.
-    The outermost enter (per session) records the previous value and
-    sets ``n``; the last exit restores. Nested/concurrent scopes must
-    agree on ``n`` (everything here uses _CURATE_PARTS) — a different
-    value raises instead of silently winning.
-
-    Keyed per SESSION — (applicationId, id(session)) — not per
-    application: the conf lives on the SparkSession, and two sessions of
-    one context (spark.newSession()) must not share a refcount or one
-    session's exit would write the other's saved value into the wrong
-    conf. id() is safe here because self.spark holds the reference for
-    the scope's whole lifetime and the entry is deleted at last exit
-    (the ADVICE r4 id-reuse hazard needs a collected object).
-
-    ACCEPTED side effect of the r12 overlapped entries: while a worker
-    thread holds the scope, main-thread jobs planned in that window also
-    execute at ``n`` shuffle partitions. Every overlapped phase here is
-    a fixture-scale job where 8-way was measured faster or neutral, so
-    this is within the runner-tuning contract — but it does make plan
-    shapes timing-dependent; operator-level code must never rely on
-    this class."""
-
-    _lock = _threading.Lock()
-    # (applicationId, id(session)) -> [depth, prev, n]
-    _active: dict[tuple, list] = {}
-
-    def __init__(self, spark: SparkSession, n: int) -> None:
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        key = (self.spark.sparkContext.applicationId, id(self.spark))
-        with self._lock:
-            st = self._active.get(key)
-            if st is None:
-                prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-                # a TRIM, never a raise (r16): the driver also benches at
-                # low core counts, where the session default is already
-                # below the fixture-scale constant — scoping must not
-                # fan a 2-core session out to 8-way shuffles
-                try:
-                    eff = min(self.n, int(prev))
-                except (TypeError, ValueError):
-                    eff = self.n
-                self.spark.conf.set(
-                    "spark.sql.shuffle.partitions", str(eff)
-                )
-                self._active[key] = [1, prev, self.n]
-            else:
-                if st[2] != self.n:
-                    raise ValueError(
-                        f"nested _scoped_shuffle_partitions disagree: "
-                        f"{st[2]} vs {self.n}"
-                    )
-                st[0] += 1
-        return self
-
-    def __exit__(self, *exc):
-        key = (self.spark.sparkContext.applicationId, id(self.spark))
-        with self._lock:
-            st = self._active[key]
-            st[0] -= 1
-            if st[0] == 0:
-                self.spark.conf.set(
-                    "spark.sql.shuffle.partitions", st[1]
-                )
-                del self._active[key]
-
-
 _SCOPED_CONF_UNSET = object()
 
 
 class _scoped_conf:
-    """Temporarily set ONE session conf for an entry's drain window,
-    restoring (or unsetting) the caller's value after. Ref-counted and
-    thread-safe per (session, conf key) for the same reason as
-    _scoped_shuffle_partitions: entries overlap drains on driver
-    threads, and the conf is session-global. Nested scopes must agree
-    on the value. Used for the streaming drains' engine tuning (r17):
-    the conf is read at query START, so it only affects queries started
-    inside the scope."""
+    """Temporarily set ONE session conf for an entry's window, restoring
+    (or unsetting) the caller's value after — the one scoped-conf
+    mechanism (``_scoped_shuffle_partitions`` is this class on
+    spark.sql.shuffle.partitions). Ref-counted and thread-safe per
+    (session, conf key): entries overlap phases and drains on driver
+    threads, and the conf is session-global, so the outermost enter
+    records the previous value and the last exit restores it. Nested
+    scopes must agree on the value — a different value raises instead of
+    silently winning. Keyed per SESSION — (applicationId, id(session)) —
+    because two sessions of one context (spark.newSession()) hold
+    separate confs; id() is safe because self.spark holds the reference
+    for the scope's lifetime and the entry is deleted at last exit (the
+    ADVICE r4 id-reuse hazard needs a collected object). Also used for
+    the streaming drains' engine tuning (r17): that conf is read at
+    query START, so it only affects queries started inside the scope."""
 
     _lock = _threading.Lock()
     # (applicationId, id(session), conf_key) -> [depth, prev, value]
@@ -3338,6 +3267,34 @@ class _scoped_conf:
                 else:
                     self.spark.conf.set(self.key, st[1])
                 del self._active[k]
+
+
+def _scoped_shuffle_partitions(spark: SparkSession, n: int) -> _scoped_conf:
+    """``_scoped_conf`` on spark.sql.shuffle.partitions for one entry's
+    eager window — the conf is read at execution-plan time, so it only
+    affects plans materialized inside the scope. Ref-counted like any
+    ``_scoped_conf``: run_curate materializes two phases on concurrent
+    driver threads inside it, and the first to exit must not flip the
+    other's still-materializing plans back to the session default.
+
+    A TRIM, never a raise (r16): the driver also benches at low core
+    counts, where the session default is already below the fixture-scale
+    constant — scoping must not fan a 2-core session out to 8-way
+    shuffles. Nested/concurrent scopes must agree on the trimmed value.
+
+    ACCEPTED side effect of the r12 overlapped entries: while a worker
+    thread holds the scope, main-thread jobs planned in that window also
+    execute at ``n`` shuffle partitions. Every overlapped phase here is
+    a fixture-scale job where 8-way was measured faster or neutral, so
+    this is within the runner-tuning contract — but it does make plan
+    shapes timing-dependent; operator-level code must never rely on
+    this scope."""
+    key = "spark.sql.shuffle.partitions"
+    try:
+        n = min(n, int(spark.conf.get(key)))
+    except (TypeError, ValueError):
+        pass
+    return _scoped_conf(spark, key, str(n))
 
 
 def _prelude_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -10,8 +10,9 @@ markers, so it is not arbitrarily splittable. The design is a two-phase scan:
    endianness, timestamp resolution, and (pcapng) the interface table in
    effect at the chunk start. A few files are indexed on the driver; a
    many-file corpus is indexed on the executors, one task per file
-   (``chunk_frame``). This phase reads headers sequentially but decodes
-   nothing — it is I/O-bound and cheap relative to decode.
+   (``sources/chunked.read_chunks``). This phase reads headers
+   sequentially but decodes nothing — it is I/O-bound and cheap relative
+   to decode.
 
 2. **Decode pass** — each task decodes one chunk: it opens its byte range,
    slices records, and calls the batch decoder (decode/parser.py) inside
@@ -19,7 +20,7 @@ markers, so it is not arbitrarily splittable. The design is a two-phase scan:
    the UDF closure and ``spark.range`` (one row and one partition per
    chunk) selects the chunk, so the decode stage is the first stage of the
    job: no Python planning task and no shuffle in front of it. For a corpus
-   the decode reads ``chunk_frame``'s descriptor rows. One chunk = one task
+   the decode reads the index tasks' descriptor rows. One chunk = one task
    = one-ish Arrow batch, so Python overhead is per-chunk, not per-packet.
 
 Scale notes (100 TB): chunk descriptors are tiny (a few hundred bytes), so a
@@ -28,7 +29,7 @@ DataFrame. Decode parallelism = chunk count, independent of file count.
 Single colossal files could bound index latency; the escape hatch is the
 speculative resync scan (``split_pcap_speculative``: split at arbitrary
 offsets, each task finds a plausible record header by timestamp/caplen
-sanity) — auto-engaged above ``SPECULATIVE_MIN_BYTES``, controllable via
+sanity) — auto-engaged above ``chunked.SPECULATIVE_MIN_BYTES``, controllable via
 ``read_pcap(..., speculative=...)``.
 
 Reference behavior mirrored (and two documented fixes):
@@ -58,6 +59,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pcap_converter_spark.schema import PACKETS_SCHEMA
+from pcap_converter_spark.sources.chunked import (
+    DEFAULT_CHUNK_BYTES,
+    cached_index,
+    read_chunks,
+    use_speculative,
+)
 
 # Magic numbers for legacy pcap.
 _MAGIC_US_BE = 0xA1B2C3D4
@@ -68,22 +75,6 @@ _IDB = 0x00000001
 _SPB = 0x00000003
 _EPB = 0x00000006
 _BYTE_ORDER_MAGIC = 0x1A2B3C4D
-
-DEFAULT_CHUNK_BYTES = 64 * 1024 * 1024
-
-CHUNK_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType()),
-        T.StructField("fmt", T.StringType()),  # 'pcap' | 'pcapng'
-        T.StructField("offset", T.LongType()),
-        T.StructField("length", T.LongType()),
-        T.StructField("endian", T.StringType()),  # '<' | '>'
-        T.StructField("linktype", T.IntegerType()),  # legacy global linktype
-        T.StructField("ts_div", T.LongType()),  # legacy: 1 (µs) or 1000 (ns)
-        T.StructField("interfaces", T.StringType()),  # pcapng: JSON [[lt, resol_code], ..]
-        T.StructField("n_records", T.LongType()),
-    ]
-)
 
 DECODE_OUTPUT_SCHEMA = T.StructType(PACKETS_SCHEMA.fields + [T.StructField("errors", T.LongType())])
 
@@ -160,7 +151,6 @@ def _index_legacy(f, path: str, target: int, file_size: int) -> Iterator[Chunk]:
 _SANE_SEC_LO = 315_532_800
 _SANE_SEC_HI = 4_102_444_800
 _RESYNC_CHAIN = 5  # consecutive plausible records required to accept a sync
-SPECULATIVE_MIN_BYTES = 256 * 1024 * 1024
 
 
 def split_pcap_speculative(
@@ -507,90 +497,26 @@ def read_pcap_chunk(chunk: dict | Chunk) -> pd.DataFrame:
     )
 
 
-# chunk-descriptor cache keyed by file identity (path, size, mtime_ns) +
-# split parameters: the exact index is a full sequential header walk of the
-# file on the driver, and re-deriving it for an unchanged file on every
-# read_pcap call is pure waste — interactive sessions and benchmarks read
-# the same capture repeatedly, and at corpus scale a production deployment
-# persists split indexes for exactly this reason (the same move as Spark's
-# own file-listing/footer caches). Descriptors are ~100 B per chunk; the
-# cap below bounds worst-case growth over a long session.
-_INDEX_CACHE: dict[tuple, list[Chunk]] = {}
-_INDEX_CACHE_MAX_FILES = 256
-
-
 def _index_or_split(path: str, target_chunk_bytes: int,
                     speculative: bool | str = "auto") -> list[Chunk]:
     """Exact index for normal files; speculative O(1) splitting for colossal
     legacy pcaps (the exact walk of a 50 GB file would serialize the whole
     read behind one task — speculative ranges resync on the executors).
-    ``speculative``: "auto" = size-triggered (≥ SPECULATIVE_MIN_BYTES),
-    True = force for any legacy pcap, False = always exact indexing.
-    Results are cached per (file identity, split params); any size or
-    mtime change invalidates."""
-    st = os.stat(path)
-    key = (
-        os.path.abspath(path), st.st_size, st.st_mtime_ns,
-        target_chunk_bytes, speculative,
-    )
-    cached = _INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    use_spec = speculative is True or (
-        speculative == "auto" and st.st_size >= SPECULATIVE_MIN_BYTES
-    )
-    chunks: list[Chunk]
-    if use_spec:
-        with open(path, "rb") as f:
-            magic = f.read(4)
-        le = int.from_bytes(magic, "little")
-        be = int.from_bytes(magic, "big")
-        if le in (_MAGIC_US_BE, _MAGIC_NS_BE) or be in (_MAGIC_US_BE, _MAGIC_NS_BE):
-            chunks = split_pcap_speculative(path, target_chunk_bytes)
-        else:
-            chunks = index_pcap(path, target_chunk_bytes)
-    else:
-        chunks = index_pcap(path, target_chunk_bytes)
-    if len(_INDEX_CACHE) >= _INDEX_CACHE_MAX_FILES:
-        _INDEX_CACHE.clear()
-    _INDEX_CACHE[key] = chunks
-    return chunks
+    ``speculative``: see ``sources/chunked.use_speculative``; pcapng always
+    takes the exact index. Results are cached per (file identity, split
+    params); any size or mtime change invalidates."""
 
+    def build() -> list[Chunk]:
+        if use_speculative(path, speculative):
+            with open(path, "rb") as f:
+                magic = f.read(4)
+            le = int.from_bytes(magic, "little")
+            be = int.from_bytes(magic, "big")
+            if le in (_MAGIC_US_BE, _MAGIC_NS_BE) or be in (_MAGIC_US_BE, _MAGIC_NS_BE):
+                return split_pcap_speculative(path, target_chunk_bytes)
+        return index_pcap(path, target_chunk_bytes)
 
-# few-files threshold: at or below this the driver walks headers itself
-# (interactive/bench shape — exact one-chunk-per-partition fan-out);
-# above it indexing AND the descriptor frame stay on the executors
-_DRIVER_INDEX_MAX_FILES = 4
-
-
-def chunk_frame(
-    spark: SparkSession,
-    paths: list[str],
-    target_chunk_bytes: int,
-    speculative: bool | str = "auto",
-):
-    """Chunk-descriptor DataFrame for a many-file corpus, WITHOUT
-    materializing the descriptor list on the driver (VERDICT r10 #6: at
-    100 TB an index-then-collect path holds ~1.6M descriptor dicts —
-    hundreds of MB — on the driver before re-parallelizing them).
-
-    One index task per file emits its own descriptors, which flow straight
-    into the decode stage through a shuffle of ~100-byte rows — driver
-    memory stays O(|paths|), never O(|chunks|). The repartition spreads
-    multi-chunk files across the cluster (a per-file partition would
-    serialize each file's decode); descriptor rows are tiny, so the
-    shuffle is noise next to one chunk's decode. ``read_pcap`` plans a few
-    files (≤ _DRIVER_INDEX_MAX_FILES) without this frame."""
-    tgt, spec = target_chunk_bytes, speculative
-    fields = [f.name for f in CHUNK_SCHEMA.fields]
-    rdd = spark.sparkContext.parallelize(paths, len(paths)).flatMap(
-        lambda p: [
-            tuple(c.__dict__[f] for f in fields)
-            for c in _index_or_split(p, tgt, spec)
-        ]
-    )
-    n_parts = max(spark.sparkContext.defaultParallelism * 4, len(paths))
-    return spark.createDataFrame(rdd, CHUNK_SCHEMA).repartition(n_parts)
+    return cached_index(path, (target_chunk_bytes, speculative), build)
 
 
 def read_pcap(
@@ -622,34 +548,10 @@ def read_pcap(
     if isinstance(paths, str):
         paths = [paths]
     obs = Observation()
-    if len(paths) <= _DRIVER_INDEX_MAX_FILES:
-        # few files: index on the driver (the descriptor cache keeps repeat
-        # reads free) and let range ids pick chunks from the closure — one
-        # partition per chunk, built by the JVM, so the decode stage is the
-        # job's first stage
-        chunks = [
-            c for p in paths for c in _index_or_split(p, target_chunk_bytes, speculative)
-        ]
-
-        def decode_ids(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for i in pdf["id"]:
-                    yield read_pcap_chunk(chunks[i])
-
-        n = len(chunks)
-        decoded = spark.range(0, n, 1, max(n, 1)).mapInPandas(
-            decode_ids, schema=DECODE_OUTPUT_SCHEMA
-        )
-    else:
-        # corpora: descriptor planning stays executor-side (VERDICT r10 #6)
-        def decode_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for rec in pdf.to_dict("records"):
-                    yield read_pcap_chunk(rec)
-
-        decoded = chunk_frame(spark, paths, target_chunk_bytes, speculative).mapInPandas(
-            decode_rows, schema=DECODE_OUTPUT_SCHEMA
-        )
+    decoded = read_chunks(
+        spark, paths, _index_or_split, read_pcap_chunk, DECODE_OUTPUT_SCHEMA,
+        target_chunk_bytes, speculative,
+    )
     decoded = decoded.observe(
         obs,
         F.count(F.lit(1)).alias("packets"),

@@ -194,3 +194,89 @@ def test_passthrough_convert_is_one_spark_job(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert stats == {"packets": 50, "errors": 0, "fragment_pct": 0.0, "defragged": False}
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+_TARGET_FACES = [
+    "read_pcap", "read_warc", "warc_documents",
+    "pcap_reader", "pcap_stream", "warc_reader", "warc_stream",
+    "pcap_format", "warc_format",
+]
+
+
+@pytest.mark.parametrize("target", [0, -1])
+@pytest.mark.parametrize("face", _TARGET_FACES)
+def test_chunk_target_below_one_raises(spark, tmp_path, face, target):
+    """target_chunk_bytes < 1 never advanced the speculative splitters
+    (``pos += 0``: the driver hung) and divided by zero in the batch
+    faces' coarse estimate. Every face now raises ValueError. The call
+    runs on a daemon thread under a timeout, so a hang fails the test
+    instead of stalling the suite."""
+    import threading
+
+    from fixtures import warcgen as wg
+    from pcap_converter_spark.sources import datasource as ds
+    from pcap_converter_spark.sources.pcap import read_pcap
+    from pcap_converter_spark.sources.warc import (
+        read_warc,
+        register_datasource,
+        warc_documents,
+    )
+
+    pcap_p = str(tmp_path / "t.pcap")
+    g.write_pcap(pcap_p, [(1_000_000 + i, _udp_pkt(i)) for i in range(20)])
+    warc_p = str(tmp_path / "t.warc")
+    wg.write_warc(warc_p, [wg.record("warcinfo", b"software: fixture\r\n")])
+    opts = {"target_chunk_bytes": str(target), "speculative": "true"}
+
+    def via_format(fmt: str, path: str):
+        ds.register(spark)
+        register_datasource(spark)
+        reader = spark.read.format(fmt)
+        for k, v in opts.items():
+            reader = reader.option(k, v)
+        reader.load(path).collect()
+
+    calls = {
+        "read_pcap": lambda: read_pcap(spark, pcap_p, target, speculative=True),
+        "read_warc": lambda: read_warc(spark, warc_p, target, speculative=True),
+        "warc_documents": lambda: warc_documents(spark, warc_p, target, speculative=True),
+        "pcap_reader": lambda: ds.PcapDataSource({"path": pcap_p, **opts}).reader(None),
+        "pcap_stream": lambda: ds.PcapDataSource({"path": pcap_p, **opts}).streamReader(None),
+        "warc_reader": lambda: ds.WarcDataSource({"path": warc_p, **opts}).reader(None),
+        "warc_stream": lambda: ds.WarcDataSource({"path": warc_p, **opts}).streamReader(None),
+        "pcap_format": lambda: via_format("pcap", pcap_p),
+        "warc_format": lambda: via_format("warc", warc_p),
+    }
+    raised: list[Exception] = []
+
+    def run() -> None:
+        try:
+            calls[face]()
+        except Exception as exc:
+            raised.append(exc)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), f"{face} hung on target_chunk_bytes={target}"
+    assert raised, f"{face} accepted target_chunk_bytes={target}"
+    assert "target_chunk_bytes must be >= 1" in str(raised[0])
+    if not face.endswith("_format"):  # Spark wraps the reader's error
+        assert isinstance(raised[0], ValueError)
+
+
+def test_function_faces_import_without_datasource_api():
+    """``read_pcap``/``read_warc`` stay importable on Spark 3.5, which has
+    no ``pyspark.sql.datasource`` (pyproject's floor is pyspark 3.5)."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import sys\n"
+        "sys.modules['pyspark.sql.datasource'] = None\n"
+        "from pcap_converter_spark.sources.pcap import read_pcap\n"
+        "from pcap_converter_spark.sources.warc import read_warc, warc_documents\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, "-c", code], cwd=repo, check=True, timeout=120)

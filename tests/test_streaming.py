@@ -125,3 +125,28 @@ def test_stream_stream_join_equals_batch(spark, events_batch):
     ).select("event_id", "r_id").cache()
     assert got.count() == expected.count()
     assert got.exceptAll(expected).count() == 0
+
+
+def test_stage_dirs_removed_at_exit(tmp_path):
+    """``stage_as_dir``'s staging dirs are removed by the module's atexit
+    hook (``_cleanup_stage_dirs``) when the interpreter exits."""
+    import os
+    import subprocess
+    import sys
+
+    src = tmp_path / "events.parquet"
+    src.write_bytes(b"stub")
+    code = (
+        "import os\n"
+        "from pcap_converter_spark.streaming.windows import stage_as_dir\n"
+        f"d = stage_as_dir({str(src)!r}, 'stage_exit_test_')\n"
+        "print(d, os.path.isdir(d))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True,
+        text=True, check=True, timeout=120,
+    )
+    d, existed = out.stdout.split()
+    assert existed == "True"
+    assert not os.path.exists(d)

@@ -135,86 +135,86 @@ def test_responses_as_documents_bridge(spark, tmp_path):
 
 def test_warc_datasource_face_matches_read_warc(spark, tmp_path):
     """spark.read.format('warc') must produce the same rows as read_warc,
-    with one partition per chunk."""
+    every column, for plain and gzip archives, with one partition per
+    chunk."""
     from pcap_converter_spark.sources.warc import register_datasource
 
     register_datasource(spark)
-    p = str(tmp_path / "ds.warc.gz")
-    wg.write_warc(p, _corpus(25), gzipped=True)
-    via_format = (
-        spark.read.format("warc")
-        .option("target_chunk_bytes", "2048")
-        .load(p)
-    )
-    assert via_format.rdd.getNumPartitions() == len(
-        index_warc(p, target_chunk_bytes=2048)
-    )
-    assert _rows(via_format) == _rows(read_warc(spark, p))
+    for name in ("ds.warc", "ds.warc.gz"):
+        p = str(tmp_path / name)
+        wg.write_warc(p, _corpus(25), gzipped=name.endswith(".gz"))
+        via_format = (
+            spark.read.format("warc")
+            .option("target_chunk_bytes", "2048")
+            .load(p)
+        )
+        lib = read_warc(spark, p, target_chunk_bytes=2048)
+        assert via_format.schema == lib.schema
+        assert via_format.rdd.getNumPartitions() == len(
+            index_warc(p, target_chunk_bytes=2048)
+        ) > 1
+        assert sorted(map(repr, via_format.collect())) == sorted(
+            map(repr, lib.collect())
+        )
+
+
+def test_warc_few_files_decode_plan_has_no_exchange(spark, tmp_path):
+    """One file plans one partition per chunk straight from the JVM: no
+    Python planning stage, no shuffle, one Spark job for the read."""
+    p = str(tmp_path / "one.warc.gz")
+    wg.write_warc(p, _corpus(20), gzipped=True)
+    n_chunks = len(index_warc(p, target_chunk_bytes=4096))
+    assert n_chunks > 1, "test needs multiple chunks"
+    df = read_warc(spark, p, target_chunk_bytes=4096)
+    assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+    assert df.rdd.getNumPartitions() == n_chunks
+    sc = spark.sparkContext
+    group = "test-warc-one-job"
+    sc.setJobGroup(group, group)
+    try:
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert df.count() == 41
 
 
 def test_warc_datasource_coarse_partitions(spark, tmp_path):
-    """VERDICT r11 #6: above max_planned_chunks estimated chunks the batch
-    face plans ONE partition per file (driver memory O(|paths|), each task
-    sub-indexing its own file at read time) with rows identical to the
-    fine-grained plan; coarse_partitions=true|false forces either mode."""
+    """VERDICT r11 #6: above 65536 estimated chunks, over at least 16
+    files, the batch face plans ONE partition per file (driver memory
+    O(|paths|), each task sub-indexing its own file at read time) with
+    rows equal to read_warc. Reached through real options only: at
+    ``target_chunk_bytes=1`` the estimate is the corpus size plus one per
+    file."""
+    import os
+
     from pcap_converter_spark.sources.warc import register_datasource
 
     register_datasource(spark)
     paths = []
-    for i in range(6):
-        fp = str(tmp_path / f"seg{i}.warc.gz")
+    for name in "abcdefghijklmnop":
+        fp = str(tmp_path / f"seg{name}.warc.gz")
         wg.write_warc(fp, _corpus(12), gzipped=True)
         paths.append(fp)
-    glob_p = str(tmp_path / "seg*.warc.gz")
-    fine = (
-        spark.read.format("warc")
-        .option("target_chunk_bytes", "2048")
-        .load(glob_p)
-    )
-    n_chunks = sum(
-        len(index_warc(p, target_chunk_bytes=2048)) for p in paths
-    )
-    assert fine.rdd.getNumPartitions() == n_chunks > len(paths)
-    # tiny cap -> auto-coarsens to one partition PER FILE, not per chunk:
-    # the bounded-driver assertion (the descriptor list the API forces
-    # through the driver is |files| long)
     coarse = (
         spark.read.format("warc")
-        .option("target_chunk_bytes", "2048")
-        .option("max_planned_chunks", "4")
-        .option("min_coarse_files", "6")
-        .load(glob_p)
+        .option("target_chunk_bytes", "1")
+        .load(str(tmp_path / "seg?.warc.gz"))
     )
-    assert coarse.rdd.getNumPartitions() == len(paths)
-    assert _rows(coarse) == _rows(fine)
+    assert coarse.rdd.getNumPartitions() == len(paths) == 16
+    assert _rows(coarse) == _rows(read_warc(spark, paths))
     # a corpus BELOW the file floor keeps fine chunks even over the cap:
     # coarse parallelism is the file count, and a near-single colossal
     # file must not collapse to a near-single-task scan
-    single = (
+    few = paths[:15]
+    assert sum(os.path.getsize(p) + 1 for p in few) > 65536
+    fine = (
         spark.read.format("warc")
-        .option("target_chunk_bytes", "2048")
-        .option("max_planned_chunks", "4")
-        .load(paths[0])
+        .option("target_chunk_bytes", "1")
+        .load(str(tmp_path / "seg[a-o].warc.gz"))
     )
-    assert single.rdd.getNumPartitions() == len(
-        index_warc(paths[0], target_chunk_bytes=2048)
-    ) > 1
-    # explicit override beats the estimate in both directions
-    forced_fine = (
-        spark.read.format("warc")
-        .option("target_chunk_bytes", "2048")
-        .option("max_planned_chunks", "4")
-        .option("min_coarse_files", "6")
-        .option("coarse_partitions", "false")
-        .load(glob_p)
-    )
-    assert forced_fine.rdd.getNumPartitions() == n_chunks
-    forced_coarse = (
-        spark.read.format("warc")
-        .option("coarse_partitions", "true")
-        .load(glob_p)
-    )
-    assert forced_coarse.rdd.getNumPartitions() == len(paths)
+    n_chunks = sum(len(index_warc(p, target_chunk_bytes=1)) for p in few)
+    assert fine.rdd.getNumPartitions() == n_chunks > len(few)
 
 
 def test_warc_index_cache_and_multifile_fanout(spark, tmp_path):
@@ -566,13 +566,10 @@ def test_warc_docs_fixture_matches_ground_truth(spark):
 
 
 def _warc_stream_reader(path, **opts):
-    from pcap_converter_spark.sources.warc import (
-        WARC_OUTPUT_SCHEMA,
-        _warc_datasource_cls,
-    )
+    from pcap_converter_spark.sources.datasource import WarcDataSource
+    from pcap_converter_spark.sources.warc import WARC_OUTPUT_SCHEMA
 
-    cls = _warc_datasource_cls()
-    return cls({"path": str(path), **opts}).streamReader(WARC_OUTPUT_SCHEMA)
+    return WarcDataSource({"path": str(path), **opts}).streamReader(WARC_OUTPUT_SCHEMA)
 
 
 def test_warc_stream_settle_gate_tracks_midpoll_growth(tmp_path):
